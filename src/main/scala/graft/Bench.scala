@@ -186,11 +186,14 @@ object Bench {
     // stdout under sbt carries an `[info] ` prefix that breaks naive
     // json.load on committed artifacts — SPARK_GRAFT_BENCH_OUT also
     // lands the line as a CLEAN file, no post-processing needed. The
-    // full line ALWAYS lands at a stable path (env override or the
-    // tmpdir default) so a stdout-tail consumer can recover every key.
+    // full line ALWAYS lands in a file (env override, else a tmpdir
+    // name unique to this run: pid + start-of-write millis) so a
+    // stdout-tail consumer can recover every key, and the compact
+    // line's `full_json` can never name another run's artifact.
     val fullPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
       new java.io.File(sys.props("java.io.tmpdir"),
-        "graft_bench_full.json").getPath)
+        s"graft_bench_full_${ProcessHandle.current().pid()}_" +
+          s"${System.currentTimeMillis()}.json").getPath)
     java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
       (line + "\n").getBytes("UTF-8"))
     // Round-15 measurement-contract fix (r14 VERDICT #2): the driver

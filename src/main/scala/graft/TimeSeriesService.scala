@@ -4,12 +4,14 @@ import java.sql.Timestamp
 
 import scala.collection.mutable.ArrayBuffer
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StringType, StructField, StructType}
 
 import graft.functions.TimeKernel
 import graft.model._
 import graft.operators.{Rollups, Timeseries}
+import graft.sources.EventSource
 
 /** The engine's service facade — the reference's `TimeSeries` protocol
   * (`api.clj:1-47`) re-expressed Spark-first.
@@ -25,10 +27,34 @@ import graft.operators.{Rollups, Timeseries}
   *
   * Canonical event schema: `(fact STRING, ts TIMESTAMP, value LONG,
   * categories MAP<STRING,STRING>)`.
+  *
+  * Declared store schemas: every parquet store this service writes and
+  * owns — the event store and the slice and day tiers of the rollups
+  * it materializes — is opened with the schema its own write plan
+  * declares ([[TimeSeriesService.eventStoreSchema]],
+  * [[graft.operators.Rollups.storeSchema]]). A serve, refresh or
+  * day-tier build therefore never runs the Spark job that parquet
+  * schema inference costs, and a store with no data yet reads as
+  * empty instead of failing. Two kinds of store still infer, because
+  * their writer owns their schema: EXTERNAL rollups ([[registerRollup]],
+  * e.g. stream-maintained), and the RETAINED partials of
+  * [[expireEvents]], which fold in prior external history. The restart
+  * paths ([[attachRollups]], [[attachEventStore]]) infer once per store
+  * and fail loudly when a declared column is missing or has another
+  * type.
   */
 object TimeSeriesService {
   def apply(spark: SparkSession): TimeSeriesService =
     new TimeSeriesService(spark)
+
+  /** The durable event store's declared schema: the canonical event
+    * columns ([[EventSource.schema]], which every write
+    * projects onto), then the `__batch_id` and `__event_date`
+    * partition columns, in directory order. */
+  val eventStoreSchema: StructType = StructType(
+    EventSource.schema.fields ++ Seq(
+      StructField("__batch_id", StringType),
+      StructField("__event_date", DateType)))
 
   /** One [[TimeSeriesService.applyAdvice]] verdict: the measured
     * events-per-slice compaction ratio (×10⁴) for a (fact, grouping)
@@ -181,7 +207,7 @@ final class TimeSeriesService(
 
   // ---- materialized rollups (reference storage strategy, opt-in) ------
 
-  /** A routed rollup: parquet dir + whether it is maintained OUTSIDE
+  /** A routed rollup: its slice [[Store]] + whether it is maintained OUTSIDE
     * this service (external = [[registerRollup]], e.g. streaming-
     * maintained) or materialized BY it ([[materializeRollups]]). The
     * distinction drives write handling: a service-materialized rollup
@@ -189,11 +215,26 @@ final class TimeSeriesService(
     * invalidates it; an external rollup holds history this service
     * never saw, so dropping it on write would silently replace the
     * streamed dataset with the (much smaller) local buffer.
-    * `dayPath`: the optional DAY-grain tier (coarsened from the slice
+    * `day`: the optional DAY-grain tier (coarsened from the slice
     * store) — served for calendar steps ≥ day with midnight-aligned
     * bounds, up to ~96× fewer rows per query. */
-  private case class RollupReg(path: String, external: Boolean,
-      dayPath: Option[String] = None)
+  private case class RollupReg(slice: Store, external: Boolean,
+      day: Option[Store] = None)
+
+  /** One parquet store directory and the schema it opens with:
+    * Some(declared) for a store this service writes, None (infer) for
+    * one whose writer owns its schema. */
+  private case class Store(path: String, schema: Option[StructType]) {
+    def read: DataFrame = Rollups.read(spark, path, schema)
+  }
+
+  /** Every store this service opens with a declared schema — the
+    * event store and each tier of its registered internal rollups —
+    * as (directory, declared schema). */
+  private[graft] def declaredStoreSchemas: Seq[(String, StructType)] =
+    storeDir.map(_ -> TimeSeriesService.eventStoreSchema).toSeq ++
+      rollupStore.values.toSeq.flatMap(r => r.slice +: r.day.toSeq)
+        .flatMap(st => st.schema.map(st.path -> _))
 
   /** Registered rollup paths: (factId, grouping) → registration. */
   private val rollupStore =
@@ -217,18 +258,74 @@ final class TimeSeriesService(
       val grouping = path :+ dim.id
       val slice = dim.sliceMinutes.getOrElse(fact.sliceMinutes)
       val out = s"$baseDir/${(path :+ dim.id :+ fact.id).mkString("_")}"
-      Rollups.materialize(prepare(fact.id, grouping), fact, slice, grouping, out)
-      // hierarchical day tier, coarsened FROM the slice store (one
-      // partial-merge aggregation — raw events are not re-read):
-      // calendar reads ≥ day with midnight bounds serve from it
-      val dayOut = s"${out}__day"
-      Rollups.materializeFactDayTier(Rollups.read(spark, out)
-        .drop("bucket_date"), fact, grouping, dayOut)
-      rollupStore((fact.id, grouping)) =
-        RollupReg(out, external = false, dayPath = Some(dayOut))
+      materializeTarget(fact, slice, grouping, out)
       out
     }
     made
+  }
+
+  /** Materialize one target's slice store and its hierarchical day
+    * tier, coarsened FROM the slice store (one partial-merge
+    * aggregation — raw events are not re-read; calendar reads ≥ day
+    * with midnight bounds serve from it), and register both with
+    * their declared schemas. */
+  private def materializeTarget(fact: FactDef, slice: Int,
+      grouping: Seq[String], out: String): Unit = {
+    val (sliceStore, dayStore) = internalStores(fact, slice, grouping, out)
+    Rollups.materialize(prepare(fact.id, grouping), fact, slice, grouping, out)
+    Rollups.materializeFactDayTier(sliceStore.read.drop("bucket_date"),
+      fact, grouping, dayStore.path)
+    rollupStore((fact.id, grouping)) =
+      RollupReg(sliceStore, external = false, day = Some(dayStore))
+  }
+
+  /** The (slice, day) stores of one service-materialized target under
+    * `out`, each with its declared schema: the analyzed output of the
+    * writer plans — [[graft.operators.Rollups.build]] over the
+    * prepared event shape, and
+    * [[graft.operators.Rollups.coarsenFactPartialsToDay]] over that —
+    * built on an empty input, so no store is listed and no job runs. */
+  private def internalStores(fact: FactDef, slice: Int,
+      grouping: Seq[String], out: String): (Store, Store) = {
+    val noEvents = spark.createDataFrame(
+      java.util.Collections.emptyList[Row](), eventViewSchema)
+    val sliceWriter = Rollups.build(project(noEvents, fact.id, grouping),
+      fact, slice, grouping)
+    val dayWriter =
+      Rollups.coarsenFactPartialsToDay(sliceWriter, fact, grouping)
+    (Store(out, Some(Rollups.storeSchema(sliceWriter))),
+      Store(s"${out}__day", Some(Rollups.storeSchema(dayWriter))))
+  }
+
+  /** RESTART check for a store reopened with a declared schema: infer
+    * the on-disk schema once and require every declared column with
+    * its declared type (nullability aside), so a store written by an
+    * incompatible build fails here, naming the store, instead of
+    * serving nulls. A store with no data files has nothing to check. */
+  private def requireDeclaredSchema(store: String, dir: String,
+      declared: StructType): Unit = {
+    val onDisk =
+      try Some(spark.read.parquet(dir).schema)
+      catch {
+        case e: AnalysisException
+            if e.getCondition == "UNABLE_TO_INFER_SCHEMA" => None
+      }
+    onDisk.foreach { found =>
+      val problems = declared.fields.flatMap { f =>
+        found.find(_.name == f.name) match {
+          case None => Some(s"column ${f.name} is missing")
+          case Some(d) if d.dataType.sql != f.dataType.sql =>
+            Some(s"column ${f.name} is ${d.dataType.sql}, declared " +
+              f.dataType.sql)
+          case _ => None
+        }
+      }
+      if (problems.nonEmpty) throw new IllegalStateException(
+        s"$store at $dir does not match its declared schema: " +
+          s"${problems.mkString("; ")} — it was written by an " +
+          "incompatible build; rebuild it (materializeRollups / re-ingest) " +
+          "instead of serving from it")
+    }
   }
 
   /** Re-attach a previously [[materializeRollups]]-written store after
@@ -262,11 +359,16 @@ final class TimeSeriesService(
       p = new org.apache.hadoop.fs.Path(out)
       if p.getFileSystem(hconf).exists(p)
     } yield {
-      val dayOut = s"${out}__day"
-      val dp = new org.apache.hadoop.fs.Path(dayOut)
-      val hasDay = dp.getFileSystem(hconf).exists(dp)
-      rollupStore((fact.id, path :+ dim.id)) = RollupReg(out,
-        external = false, dayPath = if (hasDay) Some(dayOut) else None)
+      val grouping = path :+ dim.id
+      val slice = dim.sliceMinutes.getOrElse(fact.sliceMinutes)
+      val (sliceStore, dayStore) = internalStores(fact, slice, grouping, out)
+      val dp = new org.apache.hadoop.fs.Path(dayStore.path)
+      val day = Some(dayStore).filter(_ => dp.getFileSystem(hconf).exists(dp))
+      (sliceStore +: day.toSeq).foreach(st => requireDeclaredSchema(
+        s"rollup store of (${fact.id}, ${grouping.mkString(",")})",
+        st.path, st.schema.get))
+      rollupStore((fact.id, grouping)) =
+        RollupReg(sliceStore, external = false, day = day)
       out
     }
     found
@@ -314,18 +416,17 @@ final class TimeSeriesService(
         s"${missing.mkString(", ")} — run materializeRollups first " +
         "(a window-only refresh would register a history-less store)")
     targets.map { case (fact, grouping, slice, out) =>
+      val (sliceStore, dayStore) = internalStores(fact, slice, grouping, out)
       Rollups.refreshWindow(prepare(fact.id, grouping), fact, slice,
         grouping, out, start, finish)
       // keep the day tier in step (only the touched days re-coarsen);
       // stores materialized before the tier existed stay slice-only
-      val dayOut = s"${out}__day"
-      val dayP = new org.apache.hadoop.fs.Path(dayOut)
-      val hasDay = dayP.getFileSystem(hconf).exists(dayP)
-      if (hasDay)
-        Rollups.refreshDayTierWindow(spark, out, fact, grouping, dayOut,
-          start, finish, slice)
-      rollupStore((fact.id, grouping)) = RollupReg(out, external = false,
-        dayPath = if (hasDay) Some(dayOut) else None)
+      val dayP = new org.apache.hadoop.fs.Path(dayStore.path)
+      val day = Some(dayStore).filter(_ => dayP.getFileSystem(hconf).exists(dayP))
+      day.foreach(d => Rollups.refreshDayTierWindow(spark, out, fact,
+        grouping, d.path, start, finish, slice, sliceStore.schema))
+      rollupStore((fact.id, grouping)) =
+        RollupReg(sliceStore, external = false, day = day)
       out
     }
   }
@@ -389,10 +490,9 @@ final class TimeSeriesService(
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (fs.exists(p)) {
       // driver-bounded by construction: the log is catalog-bounded
-      // (|facts|×|groupings|×|tiers| rows), same envelope as the map
-      val prior = spark.read.parquet(path)
-        .select(col("fact").cast("string"), col("grouping").cast("string"),
-          col("tier").cast("string"), col("n_reads").cast("long"))
+      // (|facts|×|groupings|×|tiers| rows), same envelope as the map;
+      // opened with the schema of the frame checkpoints write
+      val prior = spark.read.schema(workloadProfile().schema).parquet(path)
         .collect()
       readCounts.synchronized {
         prior.foreach { r =>
@@ -494,13 +594,7 @@ final class TimeSeriesService(
         val ratio = advice.getOrElse(repr, 0L)
         val made = if (ratio >= minCompactionE4) {
           val out = s"$baseDir/${(path :+ dim.id :+ fact.id).mkString("_")}"
-          Rollups.materialize(prepare(fact.id, grouping), fact, slice,
-            grouping, out)
-          val dayOut = s"${out}__day"
-          Rollups.materializeFactDayTier(Rollups.read(spark, out)
-            .drop("bucket_date"), fact, grouping, dayOut)
-          rollupStore((fact.id, grouping)) =
-            RollupReg(out, external = false, dayPath = Some(dayOut))
+          materializeTarget(fact, slice, grouping, out)
           Some(out)
         } else None
         TimeSeriesService.AdvisedRollup(fact.id, grouping.mkString(","),
@@ -517,7 +611,8 @@ final class TimeSeriesService(
     * the stream and are merged into reads at query time
     * ([[getTimeseries]]), so neither dataset is silently lost. */
   def registerRollup(factId: String, grouping: Seq[String], path: String): Unit =
-    rollupStore((factId, grouping)) = RollupReg(path, external = true)
+    rollupStore((factId, grouping)) =
+      RollupReg(Store(path, None), external = true)
 
   /** Drop service-materialized rollups for `factId` (all, when None) —
     * called by the write path so a query never reads a stale rollup;
@@ -600,11 +695,20 @@ final class TimeSeriesService(
     * it, this fails loudly instead of silently interleaving writes;
     * `takeover = true` seizes a dead writer's lease (crash recovery —
     * the caller asserts the owner is gone), after which the previous
-    * owner's next mutation fails. */
+    * owner's next mutation fails.
+    *
+    * Reads open the store with [[TimeSeriesService.eventStoreSchema]];
+    * a store that already holds events is checked against it first
+    * (one schema inference), and a missing column or a different type
+    * fails here, before the lease is taken. */
   def attachEventStore(dir: String, takeover: Boolean = false): Unit = {
     require(buffer.isEmpty && bulk.isEmpty && storeDir.isEmpty,
       "attachEventStore: attach before any event is ingested — " +
         "already-pooled in-memory events would bypass the store")
+    val root = new org.apache.hadoop.fs.Path(dir)
+    if (leaseFs(root).exists(root))
+      requireDeclaredSchema("event store", dir,
+        TimeSeriesService.eventStoreSchema)
     acquireLease(dir, takeover)
     storeDir = Some(dir)
   }
@@ -665,7 +769,7 @@ final class TimeSeriesService(
       val id = t.drop(1).toLong
       id >= minBatchId && id <= maxBatchId
     }.toSeq
-    val store = spark.read.parquet(dir)
+    val store = readEventStore(dir)
     if (kept.isEmpty) store.where(lit(false)).drop("__batch_id")
     else store.where(col("__batch_id").isin(kept: _*)).drop("__batch_id")
   }
@@ -1017,6 +1121,10 @@ final class TimeSeriesService(
     events.withColumn("__event_date", to_date(col("ts")))
 
   private def ingestTagged(events: DataFrame, tag: String): Unit = {
+    // the canonical projection and casts: what lands in the store (or
+    // the pooled union) always matches the declared event schema, so
+    // an extra column or an INT value cannot break later reads
+    val canonical = EventSource.validated(events)
     storeDir match {
       case Some(dir) =>
         assertLease(dir, "ingest")
@@ -1027,13 +1135,13 @@ final class TimeSeriesService(
         // dates from the partition index (matching the rollup layout,
         // Rollups.materialize) instead of opening every footer for
         // row-group min/max.
-        withEventDate(events).write.mode("overwrite")
+        withEventDate(canonical).write.mode("overwrite")
           .partitionBy("__event_date").parquet(s"$dir/__batch_id=$tag")
         // the incoming frame is materialized on disk now; if the caller
         // cached it for the hand-off (streaming batches), release that
         if (events.storageLevel.useMemory) events.unpersist()
       case None =>
-        bulk = Some(bulk.map(_.unionByName(events)).getOrElse(events))
+        bulk = Some(bulk.map(_.unionByName(canonical)).getOrElse(canonical))
         pendingFrames += events
         bulkDepth += 1
         if (bulkDepth >= spillDepth) {
@@ -1079,7 +1187,7 @@ final class TimeSeriesService(
       // read is a real column here); coalesce bounds writer tasks, so
       // file count is at most targetFiles × dates-per-task-span —
       // still the per-batch-dir small-file fix this exists for
-      spark.read.parquet(dir).drop("__batch_id")
+      readEventStore(dir).drop("__batch_id")
         .coalesce(targetFiles)
         .write.mode("overwrite").partitionBy("__event_date")
         .parquet(s"$outDir/__batch_id=compacted")
@@ -1205,7 +1313,7 @@ final class TimeSeriesService(
     assertLease(storeDir.get, "eraseEvents")
     acquireLease(outDir)
     val erase = coalesce(condition, lit(false))
-    val store = spark.read.parquet(storeDir.get).drop("__batch_id")
+    val store = readEventStore(storeDir.get).drop("__batch_id")
     val erased = store.where(erase).count()
     store.where(!erase)
       .write.mode("overwrite").partitionBy("__event_date")
@@ -1280,8 +1388,8 @@ final class TimeSeriesService(
         prepare(fact.id, grouping).where(col("ts") < lit(cutoff)),
         fact, slice, grouping)
       val merged = rollupStore.get((fact.id, grouping)) match {
-        case Some(RollupReg(p, true, _)) =>
-          Rollups.compactFrame(Rollups.read(spark, p)
+        case Some(RollupReg(external, true, _)) =>
+          Rollups.compactFrame(external.read
             .drop("bucket_date", "__batch_id").unionByName(aged))
         case _ => aged
       }
@@ -1292,7 +1400,10 @@ final class TimeSeriesService(
       else {
         merged.withColumn("bucket_date", to_date(col("bucket")))
           .write.mode("overwrite").partitionBy("bucket_date").parquet(out)
-        rollupStore((fact.id, grouping)) = RollupReg(out, external = true)
+        // its columns follow the external history folded in above, so
+        // the retained store is opened like an external one: inferred
+        rollupStore((fact.id, grouping)) =
+          RollupReg(Store(out, None), external = true)
         Some(out)
       }
     }
@@ -1322,14 +1433,23 @@ final class TimeSeriesService(
     * its time range into a predicate on it — partition pruning on
     * disk, a cheap redundant filter in memory — then drops it. */
   def eventsDF: DataFrame = {
-    val buffered = withEventDate(spark.createDataset(buffer.toSeq).toDF())
-    val withStore = storeDir match {
-      case Some(dir) =>
-        buffered.unionByName(spark.read.parquet(dir).drop("__batch_id"))
-      case None => buffered
-    }
-    bulk.map(b => withStore.unionByName(withEventDate(b))).getOrElse(withStore)
+    def buffered = withEventDate(spark.createDataset(buffer.toSeq).toDF())
+    val parts = Option.when(buffer.nonEmpty)(buffered) ++
+      storeDir.map(dir => readEventStore(dir).drop("__batch_id")) ++
+      bulk.map(withEventDate)
+    // no pooled events and no store: the empty buffer frame carries
+    // the schema; otherwise empty in-memory branches stay out of the plan
+    parts.reduceOption(_.unionByName(_)).getOrElse(buffered)
   }
+
+  /** The event store's frame: opened with its declared schema, so no
+    * inference job runs and a store with no batches yet reads empty. */
+  private def readEventStore(dir: String): DataFrame =
+    spark.read.schema(TimeSeriesService.eventStoreSchema).parquet(dir)
+
+  /** The schema of [[eventsDF]]: canonical events plus `__event_date`. */
+  private val eventViewSchema: StructType =
+    StructType(TimeSeriesService.eventStoreSchema.filter(_.name != "__batch_id"))
 
   // ---- Read path (O13–O20) --------------------------------------------
 
@@ -1407,17 +1527,17 @@ final class TimeSeriesService(
     * (the DAY-tier store for `rollup-day`). */
   private def routeTier(factId: String, slice: Int, grouping: Seq[String],
       step: Step, offsetHours: Int, start: Timestamp,
-      finish: Timestamp): (String, Option[String]) =
+      finish: Timestamp): (String, Option[Store]) =
     rollupStore.get((factId, grouping)) match {
       case None => ("raw-scan", None)
-      case Some(RollupReg(path, true, _)) =>
+      case Some(RollupReg(store, true, _)) =>
         (if (hasLocalEvents) "external-rollup+local-events"
-         else "external-rollup", Some(path))
-      case Some(RollupReg(path, false, dayPath)) => dayPath match {
-        case Some(dp)
+         else "external-rollup", Some(store))
+      case Some(RollupReg(store, false, day)) => day match {
+        case Some(d)
             if dayTierEligible(slice, step, offsetHours, start, finish) =>
-          ("rollup-day", Some(dp))
-        case _ => ("rollup-slice", Some(path))
+          ("rollup-day", Some(d))
+        case _ => ("rollup-slice", Some(store))
       }
     }
 
@@ -1425,26 +1545,20 @@ final class TimeSeriesService(
       grouping: Seq[String], step: Step = Step.NoStep,
       offsetHours: Int = 0, start: Timestamp = null,
       finish: Timestamp = null): Option[DataFrame] = {
-    val routed = routeTier(fact.id, slice, grouping, step, offsetHours,
-      start, finish)
+    val (tier, store) = routeTier(fact.id, slice, grouping, step,
+      offsetHours, start, finish)
     // every real serve passes here (single reads, each multi tile,
     // histograms, percentiles); explainRoute consults routeTier
     // directly, so introspection never inflates the workload
-    recordRead(fact.id, grouping, routed._1)
-    routed match {
-      case ("raw-scan", _) => None
-      case ("rollup-day", Some(dp)) => Some(Rollups.read(spark, dp))
-      case ("rollup-slice", Some(p)) => Some(Rollups.read(spark, p))
-      case (tier, Some(p)) => // the two external tiers
-        val stored = Rollups.read(spark, p)
-        if (tier.endsWith("+local-events")) {
-          val local = Rollups
-            .build(prepare(fact.id, grouping), fact, slice, grouping)
-            .withColumn("bucket_date", to_date(col("bucket")))
-          Some(stored.unionByName(local, allowMissingColumns = true))
-        } else Some(stored)
-      case (tier, None) => throw new IllegalStateException(
-        s"routeTier returned $tier with no store path") // unreachable
+    recordRead(fact.id, grouping, tier)
+    // raw-scan has no store; the external tiers union local partials
+    store.map { st =>
+      if (tier.endsWith("+local-events")) {
+        val local = Rollups
+          .build(prepare(fact.id, grouping), fact, slice, grouping)
+          .withColumn("bucket_date", to_date(col("bucket")))
+        st.read.unionByName(local, allowMissingColumns = true)
+      } else st.read
     }
   }
 
@@ -1500,7 +1614,7 @@ final class TimeSeriesService(
       val slice = dim.sliceMinutes.getOrElse(fact.sliceMinutes)
       val (tier, path) =
         routeTier(id, slice, grouping, step, offsetHours, start, finish)
-      (id, grouping.mkString(","), tier, path.orNull)
+      (id, grouping.mkString(","), tier, path.map(_.path).orNull)
     }
     rows.toDF("fact", "grouping", "tier", "registered")
   }
@@ -1573,8 +1687,8 @@ final class TimeSeriesService(
       // a registered internal store holds exactly these rows — serve
       // them instead of re-aggregating raw events into the same shape
       // (external stores skip: service-local events would be missing)
-      case Some(RollupReg(path, false, _)) =>
-        Rollups.sliceSeries(Rollups.read(spark, path), fact, slice,
+      case Some(RollupReg(store, false, _)) =>
+        Rollups.sliceSeries(store.read, fact, slice,
           grouping, filters, start, finish)
       case _ =>
         val scanned = Timeseries.scan(prepare(fact.id, grouping), slice,
@@ -1624,8 +1738,7 @@ final class TimeSeriesService(
         .withColumn("bucket_date", to_date(col("bucket")))
     }
     val dayFrame = rollupStore.get((fact.id, grouping)) match {
-      case Some(RollupReg(_, false, Some(dp))) =>
-        Some(Rollups.read(spark, dp))
+      case Some(RollupReg(_, false, day)) => day.map(_.read)
       case _ => None
     }
     (fact, slice, grouping, frame, dayFrame)
@@ -1647,9 +1760,13 @@ final class TimeSeriesService(
     * `__event_date` rides along so the scan can prune store
     * partitions; aggregation keys never include it, so it cannot leak
     * into results. */
-  private def prepare(factId: String, grouping: Seq[String]): DataFrame = {
+  private def prepare(factId: String, grouping: Seq[String]): DataFrame =
+    project(eventsDF, factId, grouping)
+
+  private def project(events: DataFrame, factId: String,
+      grouping: Seq[String]): DataFrame = {
     val dimCols = grouping.map(d => col("categories").getItem(d).as(d))
-    eventsDF
+    events
       .where(col("fact") === lit(factId))
       .select(dimCols :+ col("ts") :+ col("value") :+ col("__event_date"): _*)
   }

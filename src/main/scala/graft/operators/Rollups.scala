@@ -4,6 +4,7 @@ import java.sql.Timestamp
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{DateType, StructField, StructType}
 
 import graft.functions.TimeKernel
 import graft.model.{FactDef, FactType, Step}
@@ -121,9 +122,23 @@ object Rollups {
 
   /** Read a materialized rollup. `bucket_date` (the partition column)
     * is KEPT so [[run]] and the routing rule can derive partition
-    * predicates from bucket bounds; it is dropped before aggregation. */
-  def read(spark: SparkSession, path: String): DataFrame =
-    spark.read.parquet(path)
+    * predicates from bucket bounds; it is dropped before aggregation.
+    *
+    * `schema` is the store's declared schema ([[storeSchema]]) when
+    * the caller wrote the store itself: the read then opens with it
+    * and launches no job. None infers it from a parquet footer — one
+    * Spark job per call — which is right only for a store whose
+    * writer owns its schema (an external or retained store). */
+  def read(spark: SparkSession, path: String,
+      schema: Option[StructType] = None): DataFrame =
+    schema.fold(spark.read)(s => spark.read.schema(s)).parquet(path)
+
+  /** The schema a date-partitioned store written from `writer` reads
+    * back with: the writer's analyzed columns, in order, then the
+    * `bucket_date` partition column the write appends. Analysis only —
+    * no job, no file listing. */
+  def storeSchema(writer: DataFrame): StructType =
+    StructType(writer.schema.fields :+ StructField("bucket_date", DateType))
 
   /** Incrementally refresh ONE window of a materialized rollup: the
     * slice partials for every day touched by `[start, finish]` are
@@ -274,10 +289,12 @@ object Rollups {
     * the touched whole UTC days from it and replace only those
     * `bucket_date` partitions of the day tier (dynamic partition
     * overwrite — same outward day-snap and UTC requirement as the
-    * slice refresh, same O(window) cost). */
+    * slice refresh, same O(window) cost). `sliceSchema` is the slice
+    * store's declared schema, as for [[read]]. */
   def refreshDayTierWindow(spark: SparkSession, slicePath: String,
       fact: FactDef, grouping: Seq[String], dayPath: String,
-      start: Timestamp, finish: Timestamp, sliceMinutes: Int): Unit = {
+      start: Timestamp, finish: Timestamp, sliceMinutes: Int,
+      sliceSchema: Option[StructType]): Unit = {
     require(graft.plans.RollupRouting.isUtcZone(
         spark.sessionState.conf.sessionLocalTimeZone),
       "refreshDayTierWindow requires spark.sql.session.timeZone=UTC")
@@ -295,7 +312,7 @@ object Rollups {
     // this the "O(window)" refresh silently scans the store's entire
     // history (the between is day-inclusive; the bucket range below
     // trims the edge days exactly).
-    val window = read(spark, slicePath)
+    val window = read(spark, slicePath, sliceSchema)
       .where(col("bucket_date").between(to_date(lit(lo)), to_date(lit(hi))))
       .drop("bucket_date")
       .where(col("bucket") >= lit(lo) && col("bucket") < lit(hi))
